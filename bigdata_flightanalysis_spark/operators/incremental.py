@@ -279,7 +279,11 @@ def incremental_exact_dedup(
                 "left_semi",
             )
     if os.path.exists(state_path):
-        seen = spark.read.parquet(state_path)
+        # the store's schema is that of the frame that writes it: a
+        # declared read launches no footer-inference job
+        seen = spark.read.schema(batch_unique.select("fp").schema).parquet(
+            state_path
+        )
         fresh = batch_unique.join(seen, "fp", "left_anti")
     else:
         fresh = batch_unique
@@ -409,7 +413,7 @@ def incremental_near_dup_pairs(
     )
     batch_bands = _band_frame(_signatures_of(docs)).localCheckpoint(eager=True)
     if os.path.exists(store_path):
-        store = spark.read.parquet(store_path)
+        store = spark.read.schema(batch_bands.schema).parquet(store_path)
         probe = store.unionByName(batch_bands)
         # bucket is in the replay key, matching the embed twin: a
         # replayed doc carries identical buckets (appends nothing),
@@ -528,7 +532,7 @@ def incremental_embed_near_dup_pairs(
         _spark_bucket(F.col(emb_col), n_planes).alias("bucket"),
     ).localCheckpoint(eager=True)
     if os.path.exists(store_path):
-        store = spark.read.parquet(store_path)
+        store = spark.read.schema(batch.schema).parquet(store_path)
         probe = store.unionByName(batch)
         # bucket joins the replay anti-join's key: a replayed vec_id
         # carries the identical embedding, hence the identical bucket

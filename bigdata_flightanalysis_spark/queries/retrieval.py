@@ -42,6 +42,9 @@ Scale shape:
 
 from __future__ import annotations
 
+import threading as _threading
+from collections import OrderedDict
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -397,6 +400,16 @@ INDEX_TERM_BUCKETS = 64  # term-hash partition count for NEW index builds
 # change cannot land without the stamps moving with it.
 _INDEX_TOKENIZER = TOKENIZER_TAG
 
+# Declared schemas of the three index relations, exactly as the writers
+# below produce them (tests/test_retrieval.py compares each with its
+# parquet footers after build, refresh and compact). Every index read
+# passes its schema: inferring it from the footers costs one Spark job
+# per read, and the engine already knows what it wrote. ``bucket`` is
+# the postings' hive partition column.
+POSTINGS_SCHEMA = "term string, doc_id bigint, tf bigint, bucket int"
+DOC_STATS_SCHEMA = "doc_id bigint, dl bigint"
+CORPUS_STATS_SCHEMA = "n_docs bigint, sum_dl bigint"
+
 
 def _index_meta_path(index_path: str) -> str:
     import os
@@ -466,42 +479,82 @@ def build_text_index(
     )
 
 
-#: (terms, n_buckets) -> sorted bucket ids. Memoized because the value
-#: is a PURE function of its key — bucket = pmod(xxhash64(term),
-#: n_buckets), a fixed hash of constant strings, independent of any
-#: data — yet computing it through the engine costs one collect() job
-#: per serve call. The first serve in a process pays the tiny job;
-#: every later serve (each lifecycle query serves once per run) reuses
-#: the arithmetic result (r16 optimization). NOT a data cache: nothing
-#: here derives from table contents.
-_TERM_BUCKET_MEMO: dict[tuple[tuple[str, ...], int], list[int]] = {}
+#: Bound of ``_TERM_BUCKET_MEMO``: a serving process sees an open-ended
+#: stream of query terms, and each entry is a few dozen bytes.
+TERM_BUCKET_MEMO_SIZE = 4096
+
+#: (term, n_buckets) -> bucket id, least recently used first. Memoized
+#: because the value is a PURE function of its key — bucket =
+#: pmod(xxhash64(term), n_buckets), a fixed hash of a constant string,
+#: independent of any data — yet computing it through the engine costs
+#: one collect() job. Keyed per term, so a new tuple of already-seen
+#: terms launches no job; bounded (LRU) at TERM_BUCKET_MEMO_SIZE. NOT a
+#: data cache: nothing here derives from table contents.
+_TERM_BUCKET_MEMO: OrderedDict[tuple[str, int], int] = OrderedDict()
+_TERM_BUCKET_LOCK = _threading.Lock()
 
 
 def _term_buckets(
     spark: SparkSession, terms: tuple[str, ...], n_buckets: int
 ) -> list[int]:
-    """Bucket ids the query's terms hash to, via the ENGINE's own
-    xxhash64 (a Python reimplementation could drift from Spark's);
-    memoized per (terms, n_buckets) — see ``_TERM_BUCKET_MEMO``."""
-    key = (tuple(terms), n_buckets)
-    got = _TERM_BUCKET_MEMO.get(key)
-    if got is None:
-        got = sorted(
-            {
-                r["b"]
-                for r in spark.createDataFrame(
-                    [(t,) for t in terms], "term string"
-                )
-                .select(
-                    F.pmod(F.xxhash64("term"), F.lit(n_buckets))
-                    .cast("int")
-                    .alias("b")
-                )
-                .collect()
-            }
+    """Sorted bucket ids the query's terms hash to, via the ENGINE's own
+    xxhash64 (a Python reimplementation could drift from Spark's). Terms
+    missing from ``_TERM_BUCKET_MEMO`` are hashed in one job."""
+    found: dict[str, int] = {}
+    with _TERM_BUCKET_LOCK:
+        for t in terms:
+            b = _TERM_BUCKET_MEMO.get((t, n_buckets))
+            if b is not None:
+                _TERM_BUCKET_MEMO.move_to_end((t, n_buckets))
+                found[t] = b
+    missing = [t for t in dict.fromkeys(terms) if t not in found]
+    if missing:
+        rows = (
+            spark.createDataFrame([(t,) for t in missing], "term string")
+            .select(
+                "term",
+                F.pmod(F.xxhash64("term"), F.lit(n_buckets))
+                .cast("int")
+                .alias("b"),
+            )
+            .collect()
         )
-        _TERM_BUCKET_MEMO[key] = got
-    return got
+        with _TERM_BUCKET_LOCK:
+            for r in rows:
+                found[r["term"]] = r["b"]
+                _TERM_BUCKET_MEMO[(r["term"], n_buckets)] = r["b"]
+                _TERM_BUCKET_MEMO.move_to_end((r["term"], n_buckets))
+            while len(_TERM_BUCKET_MEMO) > TERM_BUCKET_MEMO_SIZE:
+                _TERM_BUCKET_MEMO.popitem(last=False)
+    return sorted(set(found.values()))
+
+
+def _postings_of_buckets(
+    spark: SparkSession, index_path: str, buckets: list[int]
+) -> DataFrame:
+    """The postings of the given term buckets: only their ``bucket=<b>``
+    dirs that exist are listed (at most |terms| of them, however many
+    buckets or refresh files the index holds), with the declared schema
+    and the postings root as ``basePath`` so ``bucket`` stays a
+    partition column. No such dir: an empty frame of the same schema."""
+    import os
+
+    root = f"{index_path}/postings"
+    if not os.path.isdir(root):
+        raise FileNotFoundError(
+            f"index at {index_path} has no postings relation — a torn "
+            "build; re-run build_text_index to heal"
+        )
+    dirs = [
+        d for d in (f"{root}/bucket={b}" for b in buckets) if os.path.isdir(d)
+    ]
+    if not dirs:
+        return spark.createDataFrame([], POSTINGS_SCHEMA)
+    return (
+        spark.read.schema(POSTINGS_SCHEMA)
+        .option("basePath", root)
+        .parquet(*dirs)
+    )
 
 
 def bm25_index_topk(
@@ -512,31 +565,36 @@ def bm25_index_topk(
 ) -> DataFrame:
     """BM25 top-k served from the MATERIALIZED index — bit-identical
     to the inline ``doc_bm25_topk`` (asserted in
-    tests/test_retrieval.py): per-term tfs pivot into fixed columns by
-    conditional aggregation so the score is the SAME fixed-order
-    expression tree, not an order-nondeterministic float sum; df per
-    term is the DISTINCT-doc count over its postings (== the inline
-    array_contains count on a clean index, and immune to the
-    byte-identical duplicate rows a crash-retried refresh can append);
-    avgdl recomputes from the stored exact longs with the identical
-    double division. The corpus text is never touched: the scan reads
-    ≤ |terms| postings partitions (bucket pruning) plus the narrow
-    doc-length relation."""
+    tests/test_retrieval.py). The corpus text is never touched.
+
+    Reads: only the ``postings/bucket=<b>`` dirs of the query's term
+    buckets (at most |terms| root paths, and the ``bucket IN (...)``
+    predicate keeps them a PartitionFilter), plus the narrow doc_stats
+    and corpus_stats relations — all with their declared schemas, so
+    planning launches no listing or footer-inference job.
+
+    One candidate pass: the postings group by doc_id into one row per
+    candidate with each term's tf as a fixed column (max over rows, so
+    byte-identical replayed postings rows change nothing); the score is
+    then the SAME fixed-order expression tree as the inline form, not an
+    order-nondeterministic float sum. Each term's df is the number of
+    candidates with tf > 0 — a distinct-doc count, taken from the same
+    candidate rows (the shuffle is reused) BEFORE the doc_stats join, so
+    a doc in postings but missing from doc_stats (a torn first refresh)
+    still counts. avgdl recomputes from the stored exact longs with the
+    identical double division."""
     _check_index_tokenizer(index_path)
     _recover_corpus_stats(index_path)
     n_buckets = _index_buckets(index_path)  # the modulus the index was BUILT with
-    postings = spark.read.parquet(f"{index_path}/postings")
     buckets = _term_buckets(spark, terms, n_buckets)
-    hits = postings.where(
-        F.col("bucket").isin(buckets) & F.col("term").isin(list(terms))
+    # doc_id IS NOT NULL is the join's inferred filter, stated here so
+    # the df branch's candidate shuffle is the same plan and is reused;
+    # it also keeps df a distinct non-null doc count
+    hits = _postings_of_buckets(spark, index_path, buckets).where(
+        F.col("bucket").isin(buckets)
+        & F.col("term").isin(list(terms))
+        & F.col("doc_id").isNotNull()
     )
-    # df = DISTINCT docs per term (not row count): replay-duplicated
-    # postings rows from a crash-retried refresh are exact copies, and
-    # distinctness makes both df and the max-pivoted tfs immune to them
-    dfs = hits.groupBy("term").agg(
-        F.count_distinct("doc_id").cast("bigint").alias("df")
-    )
-    df_row = dfs.groupBy().pivot("term", list(terms)).agg(F.first("df"))
     # docs containing >=1 query term, with each term's tf as a column
     cand = hits.groupBy("doc_id").agg(
         *[
@@ -548,29 +606,28 @@ def bm25_index_topk(
             for i, t in enumerate(terms)
         ]
     )
-    # Same defensive dedup as compact_text_index: two cross-HOST
-    # refreshes (flock serializes same-host only) can both append a
-    # doc their anti-joins saw as unseen — without the dedup, the dl
-    # join duplicates that doc's candidate rows and it occupies two
-    # of the k served slots with the same score.
-    doc_stats = spark.read.parquet(f"{index_path}/doc_stats").dropDuplicates(
-        ["doc_id"]
+    dfs = cand.agg(
+        *[
+            F.count_if(F.col(f"tf{i}") > 0).alias(f"df{i}")
+            for i in range(len(terms))
+        ]
     )
-    cand = cand.join(doc_stats, "doc_id")
-    corpus = spark.read.parquet(f"{index_path}/corpus_stats").select(
+    # Same defensive dedup as compact_text_index, on the joined
+    # candidates rather than all of doc_stats: two cross-HOST refreshes
+    # (flock serializes same-host only) can both append a doc their
+    # anti-joins saw as unseen — without the dedup, that doc occupies
+    # two of the k served slots with the same score.
+    doc_stats = spark.read.schema(DOC_STATS_SCHEMA).parquet(
+        f"{index_path}/doc_stats"
+    )
+    cand = cand.join(doc_stats, "doc_id").dropDuplicates(["doc_id"])
+    corpus = spark.read.schema(CORPUS_STATS_SCHEMA).parquet(
+        f"{index_path}/corpus_stats"
+    ).select(
         "n_docs",
         (F.col("sum_dl").cast("double") / F.col("n_docs")).alias("avgdl"),
     )
-    stats = corpus.crossJoin(
-        F.broadcast(df_row).select(
-            *[
-                F.coalesce(F.col(f"`{t}`"), F.lit(0))
-                .cast("bigint")
-                .alias(f"df{i}")
-                for i, t in enumerate(terms)
-            ]
-        )
-    )
+    stats = corpus.crossJoin(dfs)
 
     score = _bm25_score(terms)
 
@@ -627,7 +684,15 @@ def serve_bm25_topk(
     frame never re-reads the index (safe to serve from a temp dir the
     caller then removes). The lazy ``bm25_index_topk`` stays exposed
     for plan inspection (partition-pruning tests) and single-writer
-    callers."""
+    callers.
+
+    Job shape of a warm serve (term buckets memoized): no file-listing
+    or schema-inference job — the scan lists only the query's bucket
+    dirs, without a job, and every relation carries its declared schema —
+    then the candidate shuffle, the doc_stats and df-row broadcasts, and
+    the pin. The pin stays a ``localCheckpoint``: returning
+    ``createDataFrame`` of collected rows would turn the caller's
+    collect into a Python-RDD job."""
     from bigdata_flightanalysis_spark.util import path_lock
 
     with path_lock(index_path):
@@ -730,7 +795,9 @@ def _refresh_text_index_locked(
     new_stats = toks.select("doc_id", "dl")
 
     if os.path.exists(f"{index_path}/doc_stats"):
-        seen = spark.read.parquet(f"{index_path}/doc_stats").select("doc_id")
+        seen = spark.read.schema(DOC_STATS_SCHEMA).parquet(
+            f"{index_path}/doc_stats"
+        ).select("doc_id")
         fresh = new_stats.join(seen, "doc_id", "left_anti")
     else:
         fresh = new_stats
@@ -745,7 +812,7 @@ def _refresh_text_index_locked(
     # as the serve path: a doubly-appended doc would otherwise inflate
     # n_docs/avgdl for every score until a compaction runs
     corpus = (
-        spark.read.parquet(f"{index_path}/doc_stats")
+        spark.read.schema(DOC_STATS_SCHEMA).parquet(f"{index_path}/doc_stats")
         .dropDuplicates(["doc_id"])
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_docs"),
@@ -902,7 +969,9 @@ def _compact_text_index_locked(spark: SparkSession, index_path: str) -> None:
     # staging lives INSIDE the index dir: os.rename must not cross a
     # filesystem boundary, and the index's parent is the one mount we
     # know holds it
-    postings = spark.read.parquet(f"{index_path}/postings")
+    postings = spark.read.schema(POSTINGS_SCHEMA).parquet(
+        f"{index_path}/postings"
+    )
     # repartition FIRST, then dedup (r17, §2.3): hashpartitioning on
     # `bucket` — a subset of the (term, doc_id, bucket) grouping keys —
     # already satisfies the aggregate's clustering requirement, so the
@@ -924,9 +993,9 @@ def _compact_text_index_locked(spark: SparkSession, index_path: str) -> None:
 
     d_staging = f"{index_path}/doc_stats.staging"
     shutil.rmtree(d_staging, ignore_errors=True)
-    spark.read.parquet(f"{index_path}/doc_stats").dropDuplicates(
-        ["doc_id"]
-    ).coalesce(4).write.parquet(d_staging)
+    spark.read.schema(DOC_STATS_SCHEMA).parquet(
+        f"{index_path}/doc_stats"
+    ).dropDuplicates(["doc_id"]).coalesce(4).write.parquet(d_staging)
 
     # corpus_stats is currently aggregated over the PRE-dedup
     # doc_stats: if the defensive dropDuplicates above actually removed
@@ -943,7 +1012,7 @@ def _compact_text_index_locked(spark: SparkSession, index_path: str) -> None:
     # a serve-only workload). On a clean index this rewrites identical
     # numbers.
     (
-        spark.read.parquet(d_staging)
+        spark.read.schema(DOC_STATS_SCHEMA).parquet(d_staging)
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_docs"),
             F.sum("dl").cast("bigint").alias("sum_dl"),
@@ -1058,8 +1127,6 @@ def doc_bm25_compact_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # serving stale top-k. The lock serializes the first build: two
 # concurrent first calls would otherwise each build a full index and
 # orphan one until interpreter exit.
-import threading as _threading
-
 _SERVE_INDEX_CACHE: dict[str, tuple[str, tuple]] = {}
 _SERVE_INDEX_LOCK = _threading.Lock()
 
@@ -1211,7 +1278,9 @@ def _build_text_index_from_locked(
     # doc_id-only corpus scan for zero-token docs — but costs a
     # postings-sized shuffle; not worth it while tokenize is cheaper
     # than the postings aggregate.)
-    spark.read.parquet(f"{index_path}/doc_stats").agg(
+    spark.read.schema(DOC_STATS_SCHEMA).parquet(
+        f"{index_path}/doc_stats"
+    ).agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),
         F.sum("dl").cast("bigint").alias("sum_dl"),
     ).write.mode("overwrite").parquet(f"{index_path}/corpus_stats")

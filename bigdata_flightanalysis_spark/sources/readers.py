@@ -19,9 +19,12 @@ from bigdata_flightanalysis_spark.schemas import TABLE_NAMES, TESTDATA_SCHEMAS
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Parquet scan of one driver testdata table.
 
-    Schema comes from the parquet footer (it already matches
-    ``TESTDATA_SCHEMAS`` — asserted in tests), so the vectorized
-    reader, predicate pushdown and column pruning all apply.
+    Schema comes from the parquet footer, so the vectorized reader,
+    predicate pushdown and column pruning all apply. The footers do NOT
+    all match ``TESTDATA_SCHEMAS`` (``orders.o_orderdate``,
+    ``lineitem.l_shipdate`` and ``events.ts`` are stored as
+    ``timestamp_ntz``, declared ``timestamp``), and no test compares
+    them; inferring costs one Spark job per read.
     """
     if name not in TABLE_NAMES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLE_NAMES}")

@@ -349,3 +349,21 @@ def test_budgeted_per_query_empty_maps():
     payload = json.loads(bench.budgeted_per_query({}, {}, "custom"))
     assert payload["queries"] == {} and payload["sweep"] == {}
     assert payload["sf"] == "custom"
+
+
+def test_budgeted_per_query_final_render_fits_budget():
+    """Filling checks against the all-omitted render, whose summed
+    seconds can print narrower than the final ones (0.43 + 0.57 renders
+    as 1.0, the omitted 0.57 as 0.57): at the budget where that render
+    just fits, the final line must still fit, by evicting an entry."""
+    bench = _load_bench()
+    timings = {"q1": 0.43, "q2": 0.57}
+    full = bench.budgeted_per_query(timings, {}, 0.1, budget=10_000)
+    tight = 0
+    for budget in range(len(full) - 40, len(full) + 1):
+        line = bench.budgeted_per_query(timings, {}, 0.1, budget=budget)
+        payload = json.loads(line)
+        if payload["queries"]:
+            assert len(line) <= budget, (budget, line)
+            tight += payload["queries"] == {"q2": 0.57}
+    assert tight, "no budget admitted exactly the slowest entry"

@@ -1267,3 +1267,201 @@ def test_serve_bm25_topk_matches_lazy_form(spark, tmp_path):
     pinned = serve_bm25_topk(spark, idx)
     remove_layout(idx)
     assert [tuple(r) for r in pinned.collect()] == lazy_rows
+
+
+def _group_jobs(spark, group: str, fn):
+    """Run ``fn`` in its own job group; return its result and the
+    (call site, description) of every job it launched."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    store = jsc.statusStore()
+    jobs = []
+    for j in sorted(sc.statusTracker().getJobIdsForGroup(group)):
+        data = store.job(j)
+        desc = data.description()
+        jobs.append((data.name(), desc.get() if desc.isDefined() else ""))
+    return out, jobs
+
+
+def _relation_root_paths(df, marker: str) -> list[list[str]]:
+    """Root paths of every file relation in ``df``'s optimized plan
+    whose paths contain ``marker``, one list per relation."""
+    leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
+    out = []
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if leaf.getClass().getSimpleName() != "LogicalRelation":
+            continue
+        roots = leaf.relation().location().rootPaths()
+        paths = [roots.apply(j).toString() for j in range(roots.size())]
+        if any(marker in p for p in paths):
+            out.append(paths)
+    return out
+
+
+def test_index_relations_match_declared_schemas(spark, tmp_path):
+    """Every index reader passes the declared POSTINGS / DOC_STATS /
+    CORPUS_STATS schema instead of inferring it, so a writer change
+    must not drift from it silently: after build, refresh and compact,
+    each relation's parquet footers (plus the hive ``bucket`` column)
+    must carry exactly the declared schema."""
+    from bigdata_flightanalysis_spark.queries import retrieval as R
+    from bigdata_flightanalysis_spark.sources.readers import read_table
+
+    declared = {
+        "postings": R.POSTINGS_SCHEMA,
+        "doc_stats": R.DOC_STATS_SCHEMA,
+        "corpus_stats": R.CORPUS_STATS_SCHEMA,
+    }
+
+    def fields(schema):
+        return [(f.name, f.dataType.simpleString()) for f in schema]
+
+    def check(idx, leg):
+        for rel, ddl in declared.items():
+            footer = spark.read.parquet(f"{idx}/{rel}").schema
+            want = spark.createDataFrame([], ddl).schema
+            assert fields(footer) == fields(want), (leg, rel)
+
+    docs = read_table(spark, SF, "documents")
+    n = docs.count()
+    idx = str(tmp_path / "declared")
+    R.build_text_index_from(spark, docs.where(F.col("doc_id") < n // 2), idx)
+    check(idx, "build")
+    R.refresh_text_index(spark, docs.where(F.col("doc_id") >= n // 3), idx)
+    check(idx, "refresh")
+    R.compact_text_index(spark, idx)
+    check(idx, "compact")
+
+
+def test_warm_serve_launches_no_discovery_job(spark, tmp_path):
+    """Structural pin of the serve path: a warm serve of a built and
+    refreshed index launches no parquet listing or schema-inference job
+    (only the query's bucket dirs are listed, without a job, and every
+    relation carries its declared schema), stays within its job budget
+    — candidate shuffle, doc_stats broadcast, df shuffle and broadcast,
+    stats broadcast, pin — and its postings scan holds at most |terms|
+    root paths however many buckets the index has."""
+    import os
+
+    from bigdata_flightanalysis_spark.queries import retrieval as R
+    from bigdata_flightanalysis_spark.sources.readers import read_table
+
+    docs = read_table(spark, SF, "documents")
+    n = docs.count()
+    idx = str(tmp_path / "pin")
+    R.build_text_index_from(spark, docs.where(F.col("doc_id") < n // 2), idx)
+    R.refresh_text_index(spark, docs.where(F.col("doc_id") >= n // 2), idx)
+    buckets = [d for d in os.listdir(f"{idx}/postings") if d.startswith("bucket=")]
+    # Spark lists more paths than its parallel-discovery threshold in a
+    # job; at |terms| the serve's own bucket dirs stay under it, while a
+    # read of the whole relation (every bucket dir) would not
+    key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    assert len(buckets) > len(BM25_TERMS)
+    saved = spark.conf.get(key)
+    spark.conf.set(key, str(len(BM25_TERMS)))
+    try:
+        R.serve_bm25_topk(spark, idx)  # warm: term buckets memoized
+        pinned, jobs = _group_jobs(
+            spark, "bm25-serve-pin", lambda: R.serve_bm25_topk(spark, idx)
+        )
+    finally:
+        spark.conf.set(key, saved)
+    assert len(pinned.collect()) == BM25_TOPK
+    for name, desc in jobs:
+        assert not name.startswith("parquet at"), jobs  # footer inference
+        assert "Listing leaf files" not in desc, jobs
+    assert 0 < len(jobs) <= 6, jobs
+
+    roots = _relation_root_paths(R.bm25_index_topk(spark, idx), "/postings")
+    assert roots
+    for paths in roots:
+        assert 0 < len(paths) <= len(BM25_TERMS), paths
+        assert all("/postings/bucket=" in p for p in paths), paths
+
+
+def test_serve_terms_with_absent_buckets_match_inline(spark, tmp_path, monkeypatch):
+    """Terms whose bucket dir does not exist on disk are served from
+    the buckets that do exist — equal to the inline form — and a tuple
+    where every term is absent serves the inline form's empty result
+    instead of raising."""
+    import os
+
+    from bigdata_flightanalysis_spark.queries import retrieval as R
+
+    # a wide modulus leaves most bucket dirs absent
+    monkeypatch.setattr(R, "INDEX_TERM_BUCKETS", 4096)
+    idx = str(tmp_path / "sparse")
+    R.build_text_index(spark, SF, idx)
+
+    bucket_of = dict(
+        spark.createDataFrame([(f"zq{i}",) for i in range(4096)], "t string")
+        .select("t", F.pmod(F.xxhash64("t"), F.lit(4096)).cast("int"))
+        .collect()
+    )
+
+    def dir_exists(term):
+        return os.path.isdir(f"{idx}/postings/bucket={bucket_of[term]}")
+
+    absent_dir = [t for t in bucket_of if not dir_exists(t)]
+    absent_term = [t for t in bucket_of if dir_exists(t)]
+    assert len(absent_dir) >= 2 and absent_term
+
+    def served(terms):
+        return [tuple(r) for r in R.serve_bm25_topk(spark, idx, terms).collect()]
+
+    def inline(terms):
+        return [tuple(r) for r in R.doc_bm25_topk(spark, SF, terms).collect()]
+
+    mixed = ("spark", absent_dir[0], "join", absent_term[0])
+    assert served(mixed) == inline(mixed)
+    assert len(served(mixed)) == BM25_TOPK
+    for terms in ((absent_dir[0], absent_dir[1]), (absent_dir[0], absent_term[0])):
+        assert served(terms) == inline(terms) == []
+
+
+def test_term_bucket_memo_is_per_term_and_bounded(spark, monkeypatch):
+    """The term -> bucket memo is keyed per term, so a new tuple of
+    already-seen terms launches no job, and it never holds more than
+    TERM_BUCKET_MEMO_SIZE entries however many distinct terms a serving
+    process sees — with every answer equal to a fresh computation."""
+    from collections import OrderedDict
+
+    from bigdata_flightanalysis_spark.queries import retrieval as R
+
+    monkeypatch.setattr(R, "_TERM_BUCKET_MEMO", OrderedDict())
+    monkeypatch.setattr(R, "TERM_BUCKET_MEMO_SIZE", 4)
+    words = ["a", "b", "c"] + [f"t{i}" for i in range(8)] + [f"v{i}" for i in range(9)]
+    bucket_of = dict(
+        spark.createDataFrame([(t,) for t in words], "t string")
+        .select("t", F.pmod(F.xxhash64("t"), F.lit(64)).cast("int"))
+        .collect()
+    )
+
+    def fresh(terms):
+        return sorted({bucket_of[t] for t in terms})
+
+    got, jobs = _group_jobs(
+        spark, "memo-fill", lambda: R._term_buckets(spark, ("a", "b", "c"), 64)
+    )
+    assert got == fresh(("a", "b", "c")) and len(jobs) == 1
+    got, jobs = _group_jobs(
+        spark, "memo-hit", lambda: R._term_buckets(spark, ("c", "a"), 64)
+    )
+    assert got == fresh(("c", "a")) and jobs == []
+
+    for i in range(0, 8, 2):
+        terms = (f"t{i}", f"t{i + 1}", "a")
+        assert R._term_buckets(spark, terms, 64) == fresh(terms)
+        assert len(R._TERM_BUCKET_MEMO) <= 4
+    # a batch of more new terms than the bound is still answered whole
+    many = tuple(f"v{i}" for i in range(9))
+    assert R._term_buckets(spark, many, 64) == fresh(many)
+    assert len(R._TERM_BUCKET_MEMO) <= 4
